@@ -16,7 +16,9 @@ import org.apache.spark.sql.functions._
   * compose the deltas over the last full snapshot, and a periodic
   * [[IndexMaintenance]]-style compaction folds the composed view back
   * into one snapshot. Per-batch WRITE ∝ batch; read cost ∝ snapshot +
-  * live deltas (bounded by compaction cadence).
+  * live deltas (bounded by compaction cadence) — for [[FamilyIndex]]
+  * too, whose remap chain is collected once and composed on the driver
+  * (pinned in FamilyIndexDepthSpec).
   *
   * Layout: `path/base/v=B` full snapshots, `path/delta/v=K` per-batch
   * deltas, one monotone version sequence shared by both dirs (v=1 is

@@ -34,7 +34,8 @@ import graft.operators.Iterate.MaterializeOps
   * whose band rows are missing is never a candidate. Either way
   * precision is unharmed, so the retry discipline is "re-append on any
   * doubt". Cross-batch bucket-occupancy divergence is observable via
-  * [[cappedBucketReport]].
+  * [[cappedBucketReport]]. The band write, probe, compaction (both
+  * tables plus `_geom/`), report and forget are the [[BandIndex]] core's.
   */
 object EmbeddingLshIndex {
 
@@ -78,44 +79,36 @@ object EmbeddingLshIndex {
     else math.min(48, math.ceil(
       math.log(n / 8.0) / math.log(2.0)).toInt)
 
-  /** Driver-side cache of per-path geometry: an index's geometry is
-    * immutable once built (rebuilds at the same path go through
-    * [[build]], which refreshes the entry), so probes and appends skip
-    * the sidecar read on every call after the first.
+  private val geom = new BandIndex.Sidecar[Geometry]("_geom",
+    "tables INT, planes_per_table INT, dim INT, seed BIGINT",
+    r => Geometry(r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3)))
+  private val core = new BandIndex(Seq("table", "sig"),
+    tables = Seq("bands", "vecs"), sidecar = Some(geom))
+
+  /** The persisted build geometry, when the index carries one (cached
+    * per path on the driver — see [[BandIndex.Sidecar]]).
     */
-  private val geomCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Geometry]()
-
-  private def writeGeometry(g: Geometry, path: String,
-      spark: SparkSession): Unit = {
-    import spark.implicits._
-    Seq((g.tables, g.planesPerTable, g.dim, g.seed))
-      .toDF("tables", "planes_per_table", "dim", "seed")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_geom")
-    geomCache.put(path, g)
-  }
-
-  /** The persisted build geometry, when the index carries one. */
   def geometry(spark: SparkSession, path: String): Option[Geometry] =
-    Option(geomCache.get(path)).orElse {
-      val p = new org.apache.hadoop.fs.Path(s"$path/_geom")
-      if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p))
-        None
-      else {
-        val r = spark.read.parquet(s"$path/_geom").head()
-        val g = Geometry(r.getInt(0), r.getInt(1), r.getInt(2), r.getLong(3))
-        geomCache.put(path, g)
-        Some(g)
-      }
-    }
+    geom.get(spark, path)
+
+  /** Geometry for a batch with no index yet: explicit values, else the
+    * legacy defaults, with `planesPerTable` by the decade law.
+    */
+  private def fresh(batch: DataFrame, tables: Int, planesPerTable: Int,
+      dim: Int, seed: Long): Geometry = Geometry(
+    if (tables == Auto) LegacyGeometry.tables else tables,
+    if (planesPerTable == Auto) defaultPlanesPerTable(batch.count())
+    else planesPerTable,
+    if (dim == Auto) LegacyGeometry.dim else dim,
+    if (seed == AutoSeed) LegacyGeometry.seed else seed)
 
   /** Resolve (and validate) probe-side geometry against the sidecar. */
   private def resolve(spark: SparkSession, path: String,
       tables: Int, planesPerTable: Int, dim: Int, seed: Long): Geometry = {
     val g = geometry(spark, path)
     val base = g.getOrElse(LegacyGeometry)
-    def pick(explicitV: Int, geomV: Int, name: String): Int =
-      if (explicitV == Auto) geomV
+    def pick[T](explicitV: T, auto: T, geomV: T, name: String): T =
+      if (explicitV == auto) geomV
       else {
         require(g.isEmpty || explicitV == geomV,
           s"$name=$explicitV contradicts the index's build geometry " +
@@ -123,29 +116,20 @@ object EmbeddingLshIndex {
             "signatures that never match (silent zero recall)")
         explicitV
       }
-    val s =
-      if (seed == AutoSeed) base.seed
-      else {
-        require(g.isEmpty || seed == base.seed,
-          s"seed=$seed contradicts the index's build geometry " +
-            s"(seed=${base.seed}) at $path")
-        seed
-      }
-    Geometry(pick(tables, base.tables, "tables"),
-      pick(planesPerTable, base.planesPerTable, "planesPerTable"),
-      pick(dim, base.dim, "dim"), s)
+    Geometry(pick(tables, Auto, base.tables, "tables"),
+      pick(planesPerTable, Auto, base.planesPerTable, "planesPerTable"),
+      pick(dim, Auto, base.dim, "dim"), pick(seed, AutoSeed, base.seed, "seed"))
   }
 
-  private def bandRows(batch: DataFrame, idCol: String, vecCol: String,
-      tables: Int, planesPerTable: Int, dim: Int, seed: Long): DataFrame =
-    batch.select(col(idCol).as("id"),
-      posexplode(array((0 until tables).map(t =>
+  /** `keep` plus one `(table, sig)` row per LSH table of `vecCol`. */
+  private def bandRows(batch: DataFrame, vecCol: String, g: Geometry,
+      keep: Column*): DataFrame =
+    batch.select(keep :+
+      posexplode(array((0 until g.tables).map(t =>
         EmbeddingKnn.lshSignature(col(vecCol),
-          EmbeddingKnn.rademacherPlanes(planesPerTable, dim, seed,
-            planeOffset = t * planesPerTable))): _*))
-        .as(Seq("table", "sig")))
-
-  private def bucket: Seq[Column] = Seq(col("table"), col("sig"))
+          EmbeddingKnn.rademacherPlanes(g.planesPerTable, g.dim, g.seed,
+            planeOffset = t * g.planesPerTable))): _*))
+        .as(Seq("table", "sig")): _*)
 
   /** Write the index for an initial batch `(id, vec)`. With
     * `planesPerTable = Auto` the plane count follows the measured
@@ -161,19 +145,11 @@ object EmbeddingLshIndex {
       tables: Int = Auto, planesPerTable: Int = Auto, dim: Int = Auto,
       seed: Long = AutoSeed, maxBucketSize: Long = 100000L): Unit = {
     val vecs = batch.select(col(idCol).as("id"), col(vecCol).as("v"))
-    val g = Geometry(
-      if (tables == Auto) LegacyGeometry.tables else tables,
-      if (planesPerTable == Auto) defaultPlanesPerTable(vecs.count())
-      else planesPerTable,
-      if (dim == Auto) LegacyGeometry.dim else dim,
-      if (seed == AutoSeed) LegacyGeometry.seed else seed)
+    val g = fresh(vecs, tables, planesPerTable, dim, seed)
     vecs.write.mode("overwrite").parquet(s"$path/vecs")
-    BucketCaps.capBuckets(
-        bandRows(batch, idCol, vecCol, g.tables, g.planesPerTable, g.dim,
-          g.seed),
-        bucket, maxBucketSize)
-      .write.mode("overwrite").parquet(s"$path/bands")
-    writeGeometry(g, path, batch.sparkSession)
+    core.write(bandRows(batch, vecCol, g, col(idCol).as("id")), path,
+      "overwrite", maxBucketSize)
+    geom.put(batch.sparkSession, path, g)
   }
 
   /** Append a new batch (call AFTER probing it). Geometry resolves
@@ -187,52 +163,29 @@ object EmbeddingLshIndex {
       dim, seed)
     batch.select(col(idCol).as("id"), col(vecCol).as("v"))
       .write.mode("append").parquet(s"$path/vecs")
-    BucketCaps.capBuckets(
-        bandRows(batch, idCol, vecCol, g.tables, g.planesPerTable, g.dim,
-          g.seed),
-        bucket, maxBucketSize)
-      .write.mode("append").parquet(s"$path/bands")
+    core.write(bandRows(batch, vecCol, g, col(idCol).as("id")), path,
+      "append", maxBucketSize)
   }
 
-  /** TOMBSTONE-forget indexed vectors — the takedown path for the
-    * band-key wing, mirroring [[Bm25Index.deleteDocs]] in the exact
-    * tier. The big tables (`bands/`, `vecs/`) are flat-append and at
-    * 100 TB a physical delete would rewrite them, so forgetting is an
-    * APPEND of the ids to a third flat table `_dels/`, and every probe
-    * anti-joins its history side against it (broadcast — the tombstone
-    * set is small by construction). [[compact]] materializes the
-    * tombstones: the successor's tables are physically filtered and
-    * carry no `_dels/`.
-    *
-    * Crash semantics extend the wing's "re-append on any doubt": a
-    * torn _dels append = a partially applied delete; retry re-appends,
-    * and duplicate tombstone rows are absorbed by the anti-join. A
-    * forgotten id must not be re-ingested while its tombstone is live
-    * (the anti-join would hide the new rows); after a compact the id
-    * is free again. `ids`' first column is taken as the vector id.
+  /** TOMBSTONE-forget indexed vectors — the takedown path, mirroring
+    * [[Bm25Index.deleteDocs]] in the exact tier: the ids are appended to
+    * `_dels/` and every probe and [[cleanseWith]] anti-joins its history
+    * against it; [[compact]] materializes the delete. See
+    * [[IndexMaintenance.appendTombstones]] for the crash contract and
+    * the no-re-ingest rule. `ids`' first column is taken as the vector
+    * id, cast to the tables' long.
     */
   def forget(spark: SparkSession, path: String, ids: DataFrame): Unit =
-    ids.select(col(ids.columns.head).cast("long").as("id")).distinct()
-      .coalesce(1).write.mode("append").parquet(s"$path/_dels")
+    core.forget(path, ids.select(col(ids.columns.head).cast("long")))
 
-  /** `t` minus tombstoned ids (no-op when nothing was ever forgotten). */
-  private def minusDels(spark: SparkSession, path: String,
-      t: DataFrame): DataFrame = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_dels")
-    if (!p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)) t
-    else t.join(broadcast(spark.read.parquet(s"$path/_dels")),
-      Seq("id"), "left_anti")
-  }
-
-  /** Buckets whose cross-batch occupancy exceeds the cap — the
-    * condition under which incremental results can diverge from a
+  /** Buckets whose cross-batch occupancy (distinct ids) exceeds the cap —
+    * the condition under which incremental results can diverge from a
     * single-pass run (same divergence contract as
     * [[graft.llm.Containment.hotShingles]]).
     */
   def cappedBucketReport(spark: SparkSession, path: String,
       maxBucketSize: Long = 100000L): DataFrame =
-    BucketCaps.overflowBuckets(spark.read.parquet(s"$path/bands"),
-      bucket, maxBucketSize)
+    core.cappedBucketReport(spark, path, maxBucketSize)
 
   /** Pre-flight divergence report: buckets of `batch` that exceed the
     * cap and will be dropped at write — the embedding analogue of
@@ -249,44 +202,23 @@ object EmbeddingLshIndex {
       seed: Long = AutoSeed, maxBucketSize: Long = 100000L): DataFrame = {
     // pre-flight (no index yet): Auto resolves exactly as build would,
     // so the report names what a subsequent default build will drop
-    val g = Geometry(
-      if (tables == Auto) LegacyGeometry.tables else tables,
-      if (planesPerTable == Auto) defaultPlanesPerTable(batch.count())
-      else planesPerTable,
-      if (dim == Auto) LegacyGeometry.dim else dim,
-      if (seed == AutoSeed) LegacyGeometry.seed else seed)
-    BucketCaps.overflowBuckets(
-      bandRows(batch, idCol, vecCol, g.tables, g.planesPerTable, g.dim,
-        g.seed),
-      bucket, maxBucketSize)
+    val g = fresh(batch, tables, planesPerTable, dim, seed)
+    BucketCaps.overflowBuckets(bandRows(batch, vecCol, g, col(idCol).as("id")),
+      Seq(col("table"), col("sig")), maxBucketSize)
   }
 
   /** Compact a flat-append index into a SUCCESSOR directory: after
     * many small appends (each streamed microbatch leaves
     * shuffle-partition-count band files), rewrite both tables into
-    * `targetFiles` files each at `outPath`, contents identical —
-    * probes against the successor must hash-match probes against the
-    * original (pinned in the spec and by q222's oracle). Compaction
-    * deliberately writes a NEW directory instead of swapping in place:
-    * the band-wing crash contract ("re-append on any doubt") survives
-    * torn appends, but a torn in-place swap could lose a whole table.
-    * An immutable successor keeps recovery trivial — a crash mid-write
-    * leaves the original untouched; retry overwrites the successor;
-    * callers flip their index pointer only after this returns (the
-    * lakehouse snapshot philosophy applied to index maintenance).
+    * `targetFiles` files each at `outPath`, tombstones materialized and
+    * the geometry record carried — probes against the successor
+    * hash-match probes against the original (pinned in the spec and by
+    * q222's oracle). See [[IndexMaintenance]] for why a successor and
+    * never an in-place swap.
     */
   def compact(spark: SparkSession, path: String, outPath: String,
-      targetFiles: Int = 8): Unit = {
-    // materialize tombstones during the rewrite: the successor's
-    // tables physically exclude forgotten ids and carry no _dels/
-    minusDels(spark, path, spark.read.parquet(s"$path/vecs"))
-      .coalesce(targetFiles).write.mode("overwrite").parquet(s"$outPath/vecs")
-    minusDels(spark, path, spark.read.parquet(s"$path/bands"))
-      .coalesce(targetFiles).write.mode("overwrite").parquet(s"$outPath/bands")
-    // the successor answers probes with the SAME signatures, so it
-    // carries the same geometry record
-    geometry(spark, path).foreach(writeGeometry(_, outPath, spark))
-  }
+      targetFiles: Int = 8): Unit =
+    core.compact(spark, path, outPath, targetFiles)
 
   /** Admission-time semantic decontamination against a PERSISTED
     * reference index: the rows of `batch` whose vector has NO banded
@@ -308,19 +240,14 @@ object EmbeddingLshIndex {
       threshold: Double = 0.9, tables: Int = Auto, planesPerTable: Int = Auto,
       dim: Int = Auto, seed: Long = AutoSeed, roundSim: Int = 6): DataFrame = {
     val g = resolve(spark, path, tables, planesPerTable, dim, seed)
-    val (tablesR, planesPerTableR, dimR, seedR) =
-      (g.tables, g.planesPerTable, g.dim, g.seed)
     val ref = broadcast(
-      minusDels(spark, path, spark.read.parquet(s"$path/bands")).as("b")
+      IndexMaintenance.minusTombstones(spark, path,
+          spark.read.parquet(s"$path/bands")).as("b")
         .join(spark.read.parquet(s"$path/vecs").as("v"),
           col("b.id") === col("v.id"))
         .select(col("b.table"), col("b.sig"), col("v.v").as("rv")))
-    val contaminated = batch.select(col(idCol).as("cid"), col(vecCol).as("cv"),
-        posexplode(array((0 until tablesR).map(t =>
-          EmbeddingKnn.lshSignature(col(vecCol),
-            EmbeddingKnn.rademacherPlanes(planesPerTableR, dimR, seedR,
-              planeOffset = t * planesPerTableR))): _*))
-          .as(Seq("table", "sig")))
+    val contaminated = bandRows(batch, vecCol, g, col(idCol).as("cid"),
+        col(vecCol).as("cv"))
       .join(ref, Seq("table", "sig"))
       .filter(round(VectorFunctions.cosine(col("cv"), col("rv")), roundSim)
         >= threshold)
@@ -345,39 +272,17 @@ object EmbeddingLshIndex {
       seed: Long = AutoSeed, maxBucketSize: Long = 100000L,
       roundSim: Int = 6): DataFrame = {
     val g = resolve(spark, path, tables, planesPerTable, dim, seed)
-    // batch band rows broadcast (one materialization, two join
-    // consumers): the persisted band table streams map-side past the
-    // probe instead of shuffling per batch — the wing-wide posture
-    val newBands = BucketCaps.capBuckets(
-        bandRows(batch, idCol, vecCol, g.tables, g.planesPerTable, g.dim,
-          g.seed),
-        bucket, maxBucketSize)
-      .materialized
-    // tombstoned ids leave the candidate space here: pairs only ever
-    // form through a band join, so filtering the history bands is
+    // tombstoned ids leave the candidate space in the probe: pairs only
+    // ever form through a band join, so filtering the history bands is
     // sufficient (a forgotten id's stale vecs row can never be probed)
-    val oldBands = minusDels(spark, path, spark.read.parquet(s"$path/bands"))
-    val newVsOld = broadcast(newBands.as("n"))
-      .join(oldBands.as("o"),
-        col("n.table") === col("o.table") && col("n.sig") === col("o.sig") &&
-          col("n.id") =!= col("o.id"))
-      .select(least(col("n.id"), col("o.id")).as("id_a"),
-        greatest(col("n.id"), col("o.id")).as("id_b"))
-    val newVsNew = broadcast(newBands.as("l"))
-      .join(newBands.as("r"),
-        col("l.table") === col("r.table") && col("l.sig") === col("r.sig") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-    val pairs = newVsOld.union(newVsNew).distinct().materialized
+    val pairs = core.probe(spark, path,
+      bandRows(batch, vecCol, g, col(idCol).as("id")), maxBucketSize).materialized
     // verify only the candidate ids' vectors: the history vec table is
-    // corpus-sized and unioning ALL of it through the verification
-    // join was a corpus-proportional probe term. dropDuplicates keeps
-    // a retried append (duplicate vec rows) from fanning out the join.
-    val candIds = pairs.select(col("id_a").as("id"))
-      .union(pairs.select(col("id_b").as("id"))).distinct()
-    val lookup = batch.select(col(idCol).as("id"), col(vecCol).as("v"))
-      .union(spark.read.parquet(s"$path/vecs"))
-      .join(candIds, Seq("id"), "left_semi")
+    // corpus-sized. dropDuplicates keeps a retried append (duplicate vec
+    // rows) from fanning out the join.
+    val lookup = BandIndex.candidateRows(pairs,
+        batch.select(col(idCol).as("id"), col(vecCol).as("v"))
+          .union(spark.read.parquet(s"$path/vecs")), "id")
       .dropDuplicates("id")
     pairs
       .join(lookup.select(col("id").as("id_a"), col("v").as("va")), Seq("id_a"))

@@ -1,6 +1,8 @@
 package graft.llm
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.operators.Iterate.MaterializeOps
 
@@ -111,19 +113,34 @@ object FamilyIndex {
     DeltaChain.writeDelta(remapRows.unionByName(newRows), path, v + 1)
   }
 
-  /** Compose two rep-remap tables `(from, to)` in version order:
-    * `(r1 ⨾ r2)(x) = r2(r1(x))` where defined, with r2's fresh
-    * domain entries carried over — substitution that fully resolves
-    * rep chains (5→3 then 3→1 composes to 5→1 AND 3→1).
+  /** Compose the rep-remap tables `(from, to)` in version order:
+    * `(r1 ⨾ r2)(x) = r2(r1(x))` where defined, with r2's fresh domain
+    * entries carried over — substitution that fully resolves rep chains
+    * (5→3 then 3→1 composes to 5→1 AND 3→1). A single live delta's
+    * remap is materialized as-is, so repeated reads don't re-run the
+    * fold lineage. A longer chain is collected in ONE job — the tables
+    * are broadcast-sized by construction — and composed on the driver
+    * into a local table, so read cost stays linear in the live deltas:
+    * a plan-level pairwise fold reads its left side twice per step and
+    * doubles the composed plan with every delta.
     */
-  private def composeRemaps(r1: DataFrame, r2: DataFrame): DataFrame = {
-    val r2r = r2.select(col("from").as("_f2"), col("to").as("_t2"))
-    val chained = r1.join(r2r, r1("to") === col("_f2"), "left")
-      .select(r1("from").as("from"),
-        coalesce(col("_t2"), r1("to")).as("to"))
-    val fresh = r2.join(r1.select(col("from")), Seq("from"), "left_anti")
-    chained.unionByName(fresh)
-  }
+  private def composeRemaps(spark: SparkSession,
+      remaps: Seq[DataFrame]): DataFrame =
+    if (remaps.size == 1) remaps.head.materialized
+    else {
+      val steps = remaps.zipWithIndex
+        .map { case (r, i) => r.withColumn("step", lit(i)) }
+        .reduce(_ unionByName _).collect()
+        .groupBy(_.getInt(2)).toSeq.sortBy(_._1)
+        .map(_._2.map(r => r.get(0) -> r.get(1)).toMap)
+      val composed = steps.foldLeft(Map.empty[Any, Any]) { (acc, r2) =>
+        acc.map { case (f, t) => f -> r2.getOrElse(t, t) } ++
+          r2.filter { case (f, _) => !acc.contains(f) }
+      }
+      spark.createDataFrame(
+        composed.toSeq.map { case (f, t) => Row(f, t) }.asJava,
+        remaps.head.schema)
+    }
 
   /** The current assignment `(id, family)` — every id that ever
     * appeared in a folded pair, read through the composed delta chain:
@@ -149,9 +166,7 @@ object FamilyIndex {
         .select("id", "family"))).reduce(_ unionByName _)
       val remaps = deltas.map(_.filter(col("kind") === "remap")
         .select(col("id").as("from"), col("family").as("to")))
-      // tiny tables (broadcast-sized by construction) — checkpoint the
-      // composed chain so repeated reads don't re-run the fold lineage
-      val composed = remaps.reduce(composeRemaps).materialized
+      val composed = composeRemaps(spark, remaps)
       rows.join(broadcast(composed), rows("family") === composed("from"),
           "left")
         .select(rows("id"), coalesce(col("to"), rows("family")).as("family"))

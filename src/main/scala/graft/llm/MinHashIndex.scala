@@ -1,7 +1,6 @@
 package graft.llm
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.operators.Iterate.MaterializeOps
 
 /** Persisted MinHash band-key index — near-dup detection as an
@@ -16,52 +15,34 @@ import graft.operators.Iterate.MaterializeOps
   * occupancy — the 100 TB history is touched only through the band-key
   * join, never re-shingled, never re-signed.
   *
-  * Hot-bucket posture: `build`/`append` cap buckets WITHIN the written
-  * batch and `incrementalNearDupPairs` caps the new batch's keys, so a
-  * degenerate bucket fans out at most capᵒˡᵈ × capⁿᵉʷ per band — never
-  * quadratic in the corpus. (Cross-batch occupancy of one bucket can
-  * exceed a single batch's cap; cap at build time if batches are tiny.)
-  * Capping is a silent recall trade: [[cappedBucketReport]] makes it
-  * observable — run it when parity with a full-corpus pass matters.
-  *
-  * Crash semantics of the flat `append` layout: a writer dying before
-  * job commit leaves its files under `_temporary` (invisible to
-  * reads); dying DURING commit can leave a torn batch — a subset of
-  * the batch's band keys visible. Re-appending the same batch after
-  * either crash is SAFE for correctness: duplicate band keys only add
-  * candidate-join work, and the `distinct()` before verification
-  * collapses them — so the retry discipline is "re-append on any
-  * doubt". A torn batch left WITHOUT retry costs recall on the torn
-  * docs only (their keys are partial), never precision. The exact
-  * indexes ([[LineDedupIndex]]/[[CmsIndex]]/[[Bm25Index]]), where a
-  * torn write would corrupt counts rather than recall, use versioned
-  * commit-marker writes instead ([[IndexVersions]]).
+  * The write, probe, compaction, occupancy report and forget — with the
+  * hot-bucket caps and the "re-append on any doubt" crash contract —
+  * are the [[BandIndex]] core's. The exact indexes ([[LineDedupIndex]]/[[CmsIndex]]/
+  * [[Bm25Index]]), where a torn write would corrupt counts rather than
+  * recall, use versioned commit-marker writes instead ([[IndexVersions]]).
   */
 object MinHashIndex {
 
-  /** Buckets whose CROSS-BATCH occupancy in the persisted index exceeds
-    * `maxBucketSize` — exactly the condition under which incremental
-    * results can diverge from a single-pass full-corpus run (each batch
-    * stayed under the cap, but the union did not, so a full run would
-    * have dropped the bucket while the incremental path kept it — or
-    * vice versa). Empty report ⇒ parity-equivalent. Returns
+  /** Buckets whose CROSS-BATCH occupancy (distinct ids) in the persisted
+    * index exceeds `maxBucketSize` — exactly the condition under which
+    * incremental results can diverge from a single-pass full-corpus run
+    * (each batch stayed under the cap, but the union did not, so a full
+    * run would have dropped the bucket while the incremental path kept
+    * it — or vice versa). Empty report ⇒ parity-equivalent. Returns
     * (band, bkey, occupancy).
     */
   def cappedBucketReport(
       spark: SparkSession,
       path: String,
       maxBucketSize: Long = 100000L): DataFrame =
-    graft.operators.BucketCaps.overflowBuckets(
-      spark.read.parquet(path), Seq(col("band"), col("bkey")), maxBucketSize)
+    core.cappedBucketReport(spark, path, maxBucketSize)
 
   /** The banding geometry an index was BUILT with, persisted as a
-    * `_geom/` sidecar inside the index directory (underscore-prefixed
-    * ⇒ invisible to the band-key parquet reads, the
-    * [[EmbeddingLshIndex]] pattern). Probes and appends derive their
-    * geometry FROM the sidecar: band keys joined across mismatched
-    * (numHashes, bands) silently produce ~zero candidates — a recall
-    * collapse, not an error — so geometry must travel with the index,
-    * never be re-guessed per call.
+    * `_geom/` sidecar inside the index directory ([[BandIndex.Sidecar]]).
+    * Probes and appends derive their geometry FROM the sidecar: band keys
+    * joined across mismatched (numHashes, bands) silently produce ~zero
+    * candidates — a recall collapse, not an error — so geometry must
+    * travel with the index, never be re-guessed per call.
     */
   final case class Geometry(numHashes: Int, bands: Int, shingleWords: Int)
 
@@ -72,44 +53,25 @@ object MinHashIndex {
   private val DefaultBands = 8
   private val DefaultShingleWords = 3
 
-  private def writeGeometry(spark: SparkSession, path: String,
-      g: Geometry): Unit = {
-    import spark.implicits._
-    Seq((g.numHashes, g.bands, g.shingleWords))
-      .toDF("num_hashes", "bands", "shingle_words")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_geom")
-  }
+  private val geom = new BandIndex.Sidecar[Geometry]("_geom",
+    "num_hashes INT, bands INT, shingle_words INT",
+    r => Geometry(r.getInt(0), r.getInt(1), r.getInt(2)))
+  private val core = new BandIndex(Seq("band", "bkey"), sidecar = Some(geom))
 
   /** The persisted geometry, or None for a pre-sidecar (legacy) index.
     * Only ABSENCE maps to None: a transient read failure or a corrupt
-    * sidecar must propagate, because silently falling back to
+    * (rowless) sidecar must propagate, because silently falling back to
     * call-site defaults is exactly the mismatched-geometry recall
     * collapse the sidecar exists to prevent.
     */
-  def geometry(spark: SparkSession, path: String): Option[Geometry] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_geom")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(p)) None
-    else {
-      // an interrupted build can leave _geom/ with no data row — that
-      // is a CORRUPT sidecar, and must fail with a diagnosis, not a
-      // bare NoSuchElementException (and never a silent fallback to
-      // call-site defaults, the recall collapse this sidecar prevents)
-      val r = spark.read.parquet(s"$path/_geom").collect().headOption
-        .getOrElse(throw new IllegalStateException(
-          s"corrupt _geom sidecar at $path/_geom: directory exists but " +
-            "holds no geometry row (interrupted index build?) — rebuild " +
-            "the index or restore the sidecar"))
-      Some(Geometry(r.getAs[Int]("num_hashes"), r.getAs[Int]("bands"),
-        r.getAs[Int]("shingle_words")))
-    }
-  }
+  def geometry(spark: SparkSession, path: String): Option[Geometry] =
+    geom.get(spark, path)
 
-  /** Callers passing explicit geometry args against a sidecar-bearing
-    * index silently have them overridden (the sidecar is authoritative
-    * — mismatched band keys join to ~nothing). Surface that override:
-    * warn when the caller's args differ from BOTH the method defaults
-    * (i.e. were plausibly passed on purpose) and the persisted values.
+  /** The sidecar wins over the caller's geometry (mismatched band keys
+    * join to ~nothing), but the override is surfaced: warn when the
+    * caller's args differ from BOTH the method defaults (i.e. were
+    * plausibly passed on purpose) and the persisted values. Legacy
+    * indexes without a sidecar use the caller's args.
     *
     * Accepted residual gap: a caller who DELIBERATELY passes geometry
     * equal to the method defaults (32/8/3) against a sidecar persisting
@@ -121,19 +83,25 @@ object MinHashIndex {
     * sidecar remains authoritative either way, which is the property
     * that protects recall.
     */
-  private def warnIfArgsConflict(op: String, g: Geometry,
-      numHashes: Int, bands: Int, shingleWords: Int,
-      defaults: (Int, Int, Int)): Unit = {
-    val passed = (numHashes, bands, shingleWords)
-    if (passed != defaults &&
-        passed != ((g.numHashes, g.bands, g.shingleWords)))
-      System.err.println(
+  private def resolve(spark: SparkSession, path: String, op: String,
+      numHashes: Int, bands: Int, shingleWords: Int): Geometry = {
+    val passed = Geometry(numHashes, bands, shingleWords)
+    val side = geometry(spark, path)
+    side.filter(g => g != passed &&
+        passed != Geometry(DefaultNumHashes, DefaultBands, DefaultShingleWords))
+      .foreach(g => System.err.println(
         s"[minhash-index] $op: caller geometry (numHashes=$numHashes, " +
           s"bands=$bands, shingleWords=$shingleWords) conflicts with the " +
           s"index's _geom sidecar (${g.numHashes}, ${g.bands}, " +
           s"${g.shingleWords}); the sidecar wins — keys computed under " +
-          "any other geometry would match ~nothing")
+          "any other geometry would match ~nothing"))
+    side.getOrElse(passed)
   }
+
+  private def keys(docs: DataFrame, idCol: String, textCol: String,
+      g: Geometry): DataFrame =
+    MinHashDedup.bandKeys(docs, idCol, textCol, g.numHashes, g.bands,
+      g.shingleWords)
 
   /** Write the band-key index for an initial corpus (overwrites),
     * `bands = 0` self-calibrating for `calibrateThreshold` via
@@ -150,13 +118,11 @@ object MinHashIndex {
       shingleWords: Int = 3,
       maxBucketSize: Long = 100000L,
       calibrateThreshold: Double = 0.5): Unit = {
-    val b = if (bands == 0) MinHashDedup.bandsFor(calibrateThreshold, numHashes)
-      else bands
-    graft.operators.BucketCaps.capBuckets(
-        MinHashDedup.bandKeys(docs, idCol, textCol, numHashes, b, shingleWords),
-        Seq(col("band"), col("bkey")), maxBucketSize)
-      .write.mode("overwrite").parquet(path)
-    writeGeometry(docs.sparkSession, path, Geometry(numHashes, b, shingleWords))
+    val g = Geometry(numHashes,
+      if (bands == 0) MinHashDedup.bandsFor(calibrateThreshold, numHashes)
+      else bands, shingleWords)
+    core.write(keys(docs, idCol, textCol, g), path, "overwrite", maxBucketSize)
+    geom.put(docs.sparkSession, path, g)
   }
 
   /** Append a new batch's band keys to the index (call AFTER the batch
@@ -173,44 +139,31 @@ object MinHashIndex {
       bands: Int = DefaultBands,
       shingleWords: Int = DefaultShingleWords,
       maxBucketSize: Long = 100000L): Unit = {
-    val side = geometry(docs.sparkSession, path)
-    side.foreach(warnIfArgsConflict("append", _, numHashes, bands,
-      shingleWords, (DefaultNumHashes, DefaultBands, DefaultShingleWords)))
-    val g = side.getOrElse(Geometry(numHashes, bands, shingleWords))
-    graft.operators.BucketCaps.capBuckets(
-        MinHashDedup.bandKeys(docs, idCol, textCol,
-          g.numHashes, g.bands, g.shingleWords),
-        Seq(col("band"), col("bkey")), maxBucketSize)
-      .write.mode("append").parquet(path)
+    val g = resolve(docs.sparkSession, path, "append", numHashes, bands,
+      shingleWords)
+    core.write(keys(docs, idCol, textCol, g), path, "append", maxBucketSize)
   }
 
-  /** Compact the band-key table into a SUCCESSOR directory — see
-    * [[IndexMaintenance]] for why never in place. Probes through the
-    * successor are bit-identical (pinned in MinHashIndexSpec); any
-    * tombstones ([[forget]]) are materialized by the rewrite.
+  /** Compact the band-key table (and its `_geom` sidecar) into a
+    * SUCCESSOR directory — see [[IndexMaintenance]] for why never in
+    * place. Probes through the successor are bit-identical (pinned in
+    * MinHashIndexSpec); any tombstones ([[forget]]) are materialized by
+    * the rewrite.
     */
   def compact(spark: SparkSession, path: String, outPath: String,
-      targetFiles: Int = 8): Unit = {
-    IndexMaintenance.compactTable(spark, path, outPath, targetFiles)
-    // geometry travels with the index: the successor must probe with
-    // the same banding or candidates silently vanish
-    geometry(spark, path).foreach(writeGeometry(spark, outPath, _))
-  }
+      targetFiles: Int = 8): Unit =
+    core.compact(spark, path, outPath, targetFiles)
 
-  /** Tombstone-forget indexed docs — the takedown path; see
-    * [[IndexMaintenance.appendTombstones]] for the full contract
-    * (probes anti-join history against `_dels`; compact materializes;
-    * no re-ingest while the tombstone is live).
-    */
-  def forget(path: String, ids: DataFrame): Unit =
-    IndexMaintenance.appendTombstones(path, ids)
+  /** Tombstone-forget indexed docs — the takedown path ([[BandIndex.forget]]). */
+  def forget(path: String, ids: DataFrame): Unit = core.forget(path, ids)
 
   /** Near-dup pairs INVOLVING the new batch: new-vs-indexed plus
     * new-vs-new, LSH candidates jaccard-verified at `threshold`
     * against `allDocs` (which must cover both the batch's and the
-    * indexed ids — verification needs the text). Returns
-    * (id_a, id_b, jaccard) with id_a < id_b, exactly the subset of the
-    * full-corpus [[MinHashDedup.nearDupPairs]] that touches the batch.
+    * indexed ids — verification needs the text; only candidate ids are
+    * read). Returns (id_a, id_b, jaccard) with id_a < id_b, exactly the
+    * subset of the full-corpus [[MinHashDedup.nearDupPairs]] that
+    * touches the batch.
     */
   def incrementalNearDupPairs(
       spark: SparkSession,
@@ -224,46 +177,11 @@ object MinHashIndex {
       bands: Int = DefaultBands,
       shingleWords: Int = DefaultShingleWords,
       maxBucketSize: Long = 100000L): DataFrame = {
-    // geometry from the index's own sidecar when present — probe keys
-    // computed under a different (numHashes, bands) join to ~nothing
-    val side = geometry(spark, path)
-    side.foreach(warnIfArgsConflict("incrementalNearDupPairs", _,
-      numHashes, bands, shingleWords,
-      (DefaultNumHashes, DefaultBands, DefaultShingleWords)))
-    val g = side.getOrElse(Geometry(numHashes, bands, shingleWords))
-    // the batch's keys are admission-bounded; materialize once (two
-    // join consumers) so the shingle+minhash pass runs a single time
-    val newKeys = graft.operators.BucketCaps.capBuckets(
-        MinHashDedup.bandKeys(newDocs, idCol, textCol,
-          g.numHashes, g.bands, g.shingleWords),
-        Seq(col("band"), col("bkey")), maxBucketSize)
-      .materialized
-    val oldKeys = IndexMaintenance.minusTombstones(spark, path,
-      spark.read.parquet(path))
-    // broadcast the BATCH side: the persisted index is the corpus-sized
-    // table and must stream map-side past the probe, never shuffle —
-    // without the hint Spark has no size estimate for the computed
-    // newKeys and shuffles BOTH sides, a corpus-sized shuffle per batch
-    val newVsOld = broadcast(newKeys.as("n"))
-      .join(oldKeys.as("o"),
-        col("n.band") === col("o.band") && col("n.bkey") === col("o.bkey") &&
-          col("n.id") =!= col("o.id"))
-      .select(least(col("n.id"), col("o.id")).as("id_a"),
-        greatest(col("n.id"), col("o.id")).as("id_b"))
-    val newVsNew = broadcast(newKeys.as("l"))
-      .join(newKeys.as("r"),
-        col("l.band") === col("r.band") && col("l.bkey") === col("r.bkey") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"))
-    val cands = newVsOld.union(newVsNew).distinct().materialized
-    // verify only the docs candidates actually touch: `allDocs` may be
-    // the whole corpus (the staged superset), and shingling + shuffling
-    // non-candidate docs was the measured corpus-proportional term of
-    // the streamed family-ingest probe
-    val candIds = cands.select(col("id_a").as(idCol))
-      .union(cands.select(col("id_b").as(idCol))).distinct()
-    JaccardVerify.verify(cands,
-      allDocs.join(candIds, Seq(idCol), "left_semi"),
+    val g = resolve(spark, path, "incrementalNearDupPairs", numHashes, bands,
+      shingleWords)
+    val cands = core.probe(spark, path, keys(newDocs, idCol, textCol, g),
+      maxBucketSize).materialized
+    JaccardVerify.verify(cands, BandIndex.candidateRows(cands, allDocs, idCol),
       idCol, textCol, threshold, g.shingleWords)
   }
 }

@@ -24,28 +24,30 @@ import graft.operators.Iterate.MaterializeOps
   * incremental results equal the full run's batch-touching slice
   * (pinned in SimHashIndexSpec). Hot-bucket caps apply per written
   * batch, same caveat as [[MinHashIndex]]: [[cappedBucketReport]]
-  * surfaces when cross-batch occupancy breaks that equivalence.
+  * surfaces when cross-batch occupancy breaks that equivalence. The
+  * write, probe, compaction, report and forget are the [[BandIndex]]
+  * core's; the probe derives each pair's Hamming distance from the two
+  * stored signatures.
   */
 object SimHashIndex {
 
+  private val params = new BandIndex.Sidecar[(Int, Int)]("_params",
+    "radius INT, blocks INT", r => (r.getInt(0), r.getInt(1)))
+  private val core = new BandIndex(Seq("combo", "bkey"),
+    (a, b) => Seq(bit_count(col(s"$a.simhash").bitwiseXOR(col(s"$b.simhash")))
+      .as("hamming")),
+    sidecar = Some(params))
+
   /** The banding parameters an index was BUILT with, from its `_params`
-    * sidecar (underscore-prefixed, like [[IvfIndex]]'s `_model`:
-    * invisible to partition discovery over the index itself). Band keys
-    * are `xxhash64(combo, block values)`, so keys generated under a
+    * sidecar ([[BandIndex.Sidecar]]). Band keys are
+    * `xxhash64(combo, block values)`, so keys generated under a
     * different (radius, blocks) scheme essentially never collide with
     * the stored ones — probing with mismatched parameters would return
     * a silently near-empty candidate set, not an error. The sidecar
     * makes that a hard failure instead.
     */
-  def storedParams(spark: SparkSession, path: String): Option[(Int, Int)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/_params")
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(p)) None
-    else {
-      val r = spark.read.parquet(p.toString).head()
-      Some((r.getAs[Int]("radius"), r.getAs[Int]("blocks")))
-    }
-  }
+  def storedParams(spark: SparkSession, path: String): Option[(Int, Int)] =
+    params.get(spark, path)
 
   private def requireParamsMatch(spark: SparkSession, path: String,
       radius: Int, blocks: Int): Unit =
@@ -67,23 +69,13 @@ object SimHashIndex {
       radius: Int = 3,
       blocks: Int = 6,
       maxBucketSize: Long = 100000L): Unit = {
-    graft.operators.BucketCaps.capBuckets(
-        SimHashDedup.bandKeys(docs, idCol, textCol, radius, blocks),
-        Seq(col("combo"), col("bkey")), maxBucketSize)
-      .write.mode("overwrite").parquet(path)
-    val spark = docs.sparkSession
-    import spark.implicits._
-    Seq((radius, blocks)).toDF("radius", "blocks")
-      .coalesce(1).write.mode("overwrite").parquet(s"$path/_params")
+    core.write(SimHashDedup.bandKeys(docs, idCol, textCol, radius, blocks),
+      path, "overwrite", maxBucketSize)
+    params.put(docs.sparkSession, path, (radius, blocks))
   }
 
   /** Append a new batch's band keys (call AFTER deduping the batch
     * against the index). Parameters are validated against the sidecar.
-    *
-    * Crash semantics are [[MinHashIndex]]'s (see its scaladoc): band
-    * keys are presence-only, so re-appending a batch after a torn or
-    * uncertain write is SAFE — duplicates only add candidate-join work
-    * and the downstream distinct/verify collapses them.
     */
   def append(
       docs: DataFrame,
@@ -94,10 +86,8 @@ object SimHashIndex {
       blocks: Int = 6,
       maxBucketSize: Long = 100000L): Unit = {
     requireParamsMatch(docs.sparkSession, path, radius, blocks)
-    graft.operators.BucketCaps.capBuckets(
-        SimHashDedup.bandKeys(docs, idCol, textCol, radius, blocks),
-        Seq(col("combo"), col("bkey")), maxBucketSize)
-      .write.mode("append").parquet(path)
+    core.write(SimHashDedup.bandKeys(docs, idCol, textCol, radius, blocks),
+      path, "append", maxBucketSize)
   }
 
   /** Compact the band-key table into a SUCCESSOR directory (the
@@ -106,11 +96,8 @@ object SimHashIndex {
     * (pinned in SimHashIndexSpec).
     */
   def compact(spark: SparkSession, path: String, outPath: String,
-      targetFiles: Int = 8): Unit = {
-    IndexMaintenance.compactTable(spark, path, outPath, targetFiles)
-    spark.read.parquet(s"$path/_params").coalesce(1)
-      .write.mode("overwrite").parquet(s"$outPath/_params")
-  }
+      targetFiles: Int = 8): Unit =
+    core.compact(spark, path, outPath, targetFiles)
 
   /** Candidate pairs INVOLVING the new batch, with exact Hamming
     * distances: new-vs-indexed plus new-vs-new. Returns
@@ -126,30 +113,9 @@ object SimHashIndex {
       blocks: Int = 6,
       maxBucketSize: Long = 100000L): DataFrame = {
     requireParamsMatch(spark, path, radius, blocks)
-    // materialize the admission-bounded batch keys once (two join
-    // consumers) and BROADCAST them: the persisted index is the
-    // corpus-sized side and must stream map-side past the probe, never
-    // shuffle per batch (the MinHashIndex probe lesson, measured there)
-    val newKeys = graft.operators.BucketCaps.capBuckets(
-        SimHashDedup.bandKeys(newDocs, idCol, textCol, radius, blocks),
-        Seq(col("combo"), col("bkey")), maxBucketSize)
-      .materialized
-    val oldKeys = IndexMaintenance.minusTombstones(spark, path,
-      spark.read.parquet(path))
-    val newVsOld = broadcast(newKeys.as("n"))
-      .join(oldKeys.as("o"),
-        col("n.combo") === col("o.combo") && col("n.bkey") === col("o.bkey") &&
-          col("n.id") =!= col("o.id"))
-      .select(least(col("n.id"), col("o.id")).as("id_a"),
-        greatest(col("n.id"), col("o.id")).as("id_b"),
-        bit_count(col("n.simhash").bitwiseXOR(col("o.simhash"))).as("hamming"))
-    val newVsNew = broadcast(newKeys.as("l"))
-      .join(newKeys.as("r"),
-        col("l.combo") === col("r.combo") && col("l.bkey") === col("r.bkey") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        bit_count(col("l.simhash").bitwiseXOR(col("r.simhash"))).as("hamming"))
-    newVsOld.unionByName(newVsNew).distinct()
+    core.probe(spark, path,
+      SimHashDedup.bandKeys(newDocs, idCol, textCol, radius, blocks),
+      maxBucketSize)
   }
 
   /** Pairs involving the batch within `radius` Hamming distance — pure
@@ -170,11 +136,11 @@ object SimHashIndex {
       .filter(col("hamming") <= radius)
 
   /** Banding candidates with exact shingle-Jaccard verification against
-    * `allDocs` (must cover batch and indexed ids — Jaccard needs text).
-    * Same contract and same scale valve as
-    * [[SimHashDedup.nearDupPairsJaccard]]: candidates are prefiltered to
-    * `hamming <= radius` before the shingle-array verification join, so
-    * out-of-radius combo collisions die as two-long rows instead of
+    * `allDocs` (must cover batch and indexed ids — Jaccard needs text;
+    * only candidate ids are read). Same contract and same scale valve
+    * as [[SimHashDedup.nearDupPairsJaccard]]: candidates are prefiltered
+    * to `hamming <= radius` before the shingle-array verification join,
+    * so out-of-radius combo collisions die as two-long rows instead of
     * hauling document shingles through the shuffle.
     */
   def incrementalNearDupPairsJaccard(
@@ -193,17 +159,10 @@ object SimHashIndex {
       blocks: Int = 6,
       shingleWords: Int = 3,
       maxBucketSize: Long = 100000L): DataFrame = {
-    // verify only the docs the candidates touch: `allDocs` may be the
-    // whole corpus, and shingling + shuffling non-candidate docs is a
-    // corpus-proportional probe term (the MinHashIndex measurement)
-    val cands = incrementalCandidates(spark, path, newDocs, idCol,
+    val cands = incrementalNearDupPairs(spark, path, newDocs, idCol,
         textCol, radius, blocks, maxBucketSize)
-      .filter(col("hamming") <= radius)
       .materialized
-    val candIds = cands.select(col("id_a").as(idCol))
-      .union(cands.select(col("id_b").as(idCol))).distinct()
-    JaccardVerify.verify(cands,
-      allDocs.join(candIds, Seq(idCol), "left_semi"),
+    JaccardVerify.verify(cands, BandIndex.candidateRows(cands, allDocs, idCol),
       idCol, textCol, threshold, shingleWords)
   }
 
@@ -214,13 +173,8 @@ object SimHashIndex {
       spark: SparkSession,
       path: String,
       maxBucketSize: Long = 100000L): DataFrame =
-    graft.operators.BucketCaps.overflowBuckets(
-      spark.read.parquet(path), Seq(col("combo"), col("bkey")), maxBucketSize)
-  /** Tombstone-forget indexed docs — the takedown path; see
-    * [[graft.llm.IndexMaintenance.appendTombstones]] for the full
-    * contract (probes anti-join history against `_dels`; compact
-    * materializes; no re-ingest while the tombstone is live).
-    */
-  def forget(path: String, ids: org.apache.spark.sql.DataFrame): Unit =
-    graft.llm.IndexMaintenance.appendTombstones(path, ids)
+    core.cappedBucketReport(spark, path, maxBucketSize)
+
+  /** Tombstone-forget indexed docs — the takedown path ([[BandIndex.forget]]). */
+  def forget(path: String, ids: DataFrame): Unit = core.forget(path, ids)
 }

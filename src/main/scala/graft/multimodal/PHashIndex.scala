@@ -3,8 +3,7 @@ package graft.multimodal
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.operators.BucketCaps
-import graft.operators.Iterate.MaterializeOps
+import graft.llm.BandIndex
 
 /** Persisted perceptual-hash band index — image (or audio/video-frame)
   * near-dup detection as an INCREMENTAL operation, the multimodal
@@ -22,13 +21,16 @@ import graft.operators.Iterate.MaterializeOps
   * hashing deployable at 100 TB — the media bytes are read once, at
   * ingest.
   *
-  * Crash semantics match the band-key wing: flat append, torn batches
-  * cost recall on the torn docs only (never precision — `distinct()`
-  * collapses duplicate keys), so the retry discipline is "re-append on
-  * any doubt". Caps are per-written-batch plus per-probe; cross-batch
-  * occupancy divergence is observable via [[cappedBucketReport]].
+  * The write, probe (each pair's Hamming distance comes from the two
+  * stored hashes), compaction, report and forget — with the wing's caps
+  * and "re-append on any doubt" crash contract — are the [[BandIndex]]
+  * core's.
   */
 object PHashIndex {
+
+  private val core = new BandIndex(Seq("band", "key"), (a, b) => Seq(
+    (bit_count(col(s"$a.h1").bitwiseXOR(col(s"$b.h1"))) +
+      bit_count(col(s"$a.h2").bitwiseXOR(col(s"$b.h2")))).cast("long").as("hamming")))
 
   private def explodeBands(hashes: DataFrame, idCol: String): DataFrame =
     hashes.select(col(idCol).as("id"), col("h1"), col("h2"),
@@ -46,24 +48,20 @@ object PHashIndex {
   /** Write the band index for an initial hash table `(id, h1, h2)`. */
   def build(hashes: DataFrame, path: String, idCol: String = "id",
       maxBucketSize: Long = 10000L): Unit =
-    BucketCaps.capBuckets(explodeBands(hashes, idCol),
-        Seq(col("band"), col("key")), maxBucketSize)
-      .write.mode("overwrite").parquet(path)
+    core.write(explodeBands(hashes, idCol), path, "overwrite", maxBucketSize)
 
   /** Append a new batch's band rows (call AFTER probing the batch). */
   def append(hashes: DataFrame, path: String, idCol: String = "id",
       maxBucketSize: Long = 10000L): Unit =
-    BucketCaps.capBuckets(explodeBands(hashes, idCol),
-        Seq(col("band"), col("key")), maxBucketSize)
-      .write.mode("append").parquet(path)
+    core.write(explodeBands(hashes, idCol), path, "append", maxBucketSize)
 
   /** Compact the band table into a SUCCESSOR directory — see
     * [[graft.llm.IndexMaintenance]] for why never in place. Probes
     * through the successor are bit-identical (pinned in PHashIndexSpec).
     */
-  def compact(spark: org.apache.spark.sql.SparkSession, path: String,
-      outPath: String, targetFiles: Int = 8): Unit =
-    graft.llm.IndexMaintenance.compactTable(spark, path, outPath, targetFiles)
+  def compact(spark: SparkSession, path: String, outPath: String,
+      targetFiles: Int = 8): Unit =
+    core.compact(spark, path, outPath, targetFiles)
 
   /** Buckets whose cross-batch occupancy exceeds the cap — the
     * condition under which incremental results can diverge from a
@@ -71,8 +69,7 @@ object PHashIndex {
     */
   def cappedBucketReport(spark: SparkSession, path: String,
       maxBucketSize: Long = 10000L): DataFrame =
-    BucketCaps.overflowBuckets(spark.read.parquet(path),
-      Seq(col("band"), col("key")), maxBucketSize)
+    core.cappedBucketReport(spark, path, maxBucketSize)
 
   /** Near-dup pairs of a NEW hash batch against indexed history AND
     * itself: `(id_a, id_b, hamming ≤ radius)`, verified entirely from
@@ -84,48 +81,10 @@ object PHashIndex {
       newHashes: DataFrame,
       idCol: String = "id",
       radius: Int = 8,
-      maxBucketSize: Long = 10000L): DataFrame = {
-    // batch keys broadcast: the persisted index streams map-side past
-    // the probe instead of shuffling per batch (wing-wide posture)
-    val newKeys = BucketCaps.capBuckets(explodeBands(newHashes, idCol),
-        Seq(col("band"), col("key")), maxBucketSize)
-      .materialized
-    val oldKeys = graft.llm.IndexMaintenance.minusTombstones(spark, path,
-      spark.read.parquet(path))
-    val newVsOld = broadcast(newKeys.as("n"))
-      .join(oldKeys.as("o"),
-        col("n.band") === col("o.band") && col("n.key") === col("o.key") &&
-          col("n.id") =!= col("o.id"))
-      .select(
-        least(col("n.id"), col("o.id")).as("id_a"),
-        greatest(col("n.id"), col("o.id")).as("id_b"),
-        when(col("n.id") < col("o.id"), col("n.h1")).otherwise(col("o.h1"))
-          .as("h1a"),
-        when(col("n.id") < col("o.id"), col("n.h2")).otherwise(col("o.h2"))
-          .as("h2a"),
-        when(col("n.id") < col("o.id"), col("o.h1")).otherwise(col("n.h1"))
-          .as("h1b"),
-        when(col("n.id") < col("o.id"), col("o.h2")).otherwise(col("n.h2"))
-          .as("h2b"))
-    val newVsNew = broadcast(newKeys.as("l"))
-      .join(newKeys.as("r"),
-        col("l.band") === col("r.band") && col("l.key") === col("r.key") &&
-          col("l.id") < col("r.id"))
-      .select(col("l.id").as("id_a"), col("r.id").as("id_b"),
-        col("l.h1").as("h1a"), col("l.h2").as("h2a"),
-        col("r.h1").as("h1b"), col("r.h2").as("h2b"))
-    newVsOld.union(newVsNew).distinct()
-      .withColumn("hamming",
-        (bit_count(col("h1a").bitwiseXOR(col("h1b"))) +
-          bit_count(col("h2a").bitwiseXOR(col("h2b")))).cast("long"))
+      maxBucketSize: Long = 10000L): DataFrame =
+    core.probe(spark, path, explodeBands(newHashes, idCol), maxBucketSize)
       .filter(col("hamming") <= radius)
-      .select("id_a", "id_b", "hamming")
-  }
-  /** Tombstone-forget indexed docs — the takedown path; see
-    * [[graft.llm.IndexMaintenance.appendTombstones]] for the full
-    * contract (probes anti-join history against `_dels`; compact
-    * materializes; no re-ingest while the tombstone is live).
-    */
-  def forget(path: String, ids: org.apache.spark.sql.DataFrame): Unit =
-    graft.llm.IndexMaintenance.appendTombstones(path, ids)
+
+  /** Tombstone-forget indexed docs — the takedown path ([[BandIndex.forget]]). */
+  def forget(path: String, ids: DataFrame): Unit = core.forget(path, ids)
 }
