@@ -12,8 +12,9 @@ import graft.operators.Iterate.MaterializeOps
   * [[EmbeddingLshIndex]]). Each index derives presence-only band rows
   * `(id, bucket..., payload...)` from its own input and keeps its own
   * verifier and its caller-vs-sidecar rule; everything between lives
-  * here once: the capped write, the probe, compaction, the occupancy
-  * report and tombstone forget.
+  * here once: the capped write, the probe, compaction and the occupancy
+  * report. Forget is [[IndexMaintenance.appendTombstones]] on the index
+  * root.
   *
   * `pairCols(a, b)` derives per-pair columns (a Hamming distance) from
   * the payload of the two matched rows, addressed by their aliases. It
@@ -92,10 +93,8 @@ final class BandIndex(bucket: Seq[String],
     */
   def compact(spark: SparkSession, path: String, outPath: String,
       targetFiles: Int): Unit = {
-    require(targetFiles >= 1)
-    tables.foreach(t => IndexMaintenance.minusTombstones(spark, path,
-        spark.read.parquet(table(path, t)))
-      .coalesce(targetFiles).write.mode("overwrite").parquet(table(outPath, t)))
+    tables.foreach(t => IndexMaintenance.compactTable(spark, table(path, t),
+      table(outPath, t), targetFiles, Some(path)))
     sidecar.foreach(_.copy(spark, path, outPath))
   }
 
@@ -111,14 +110,6 @@ final class BandIndex(bucket: Seq[String],
     BucketCaps.overflowBuckets(
       spark.read.parquet(bandTable(path)).select(("id" +: bucket).map(col): _*)
         .distinct(), bucket.map(col), maxBucketSize)
-
-  /** Tombstone-forget indexed ids — the takedown path; see
-    * [[IndexMaintenance.appendTombstones]] for the full contract (probes
-    * anti-join history against `_dels`; compact materializes; no
-    * re-ingest while the tombstone is live).
-    */
-  def forget(path: String, ids: DataFrame): Unit =
-    IndexMaintenance.appendTombstones(path, ids)
 }
 
 object BandIndex {
@@ -136,14 +127,23 @@ object BandIndex {
     * (underscore-prefixed ⇒ invisible to the band table's own parquet
     * reads). Band keys computed under other parameters join to ~nothing
     * — a silent recall collapse, not an error — so the parameters travel
-    * with the index. Values are cached per path on the driver: they are
-    * immutable once written, and every write goes through [[put]].
+    * with the index.
+    *
+    * With `cached` (the default), values are cached per path on the
+    * driver after the first read. That assumes ONE WRITER PER PATH: an
+    * index is immutable once built and every rebuild in this JVM goes
+    * through [[put]], which refreshes the entry — but a rebuild at the
+    * same path by ANOTHER process is not seen, and this JVM keeps using
+    * the old parameters. A sidecar that only guards (a fail-fast check
+    * against caller parameters) passes `cached = false` and reads the
+    * table on every call.
     *
     * Only ABSENCE reads as None (a legacy index): a sidecar directory
     * holding no row (an interrupted build) fails with a diagnosis,
     * never a silent fallback to call-site values.
     */
-  final class Sidecar[P <: Product](name: String, ddl: String, fromRow: Row => P) {
+  final class Sidecar[P <: Product](name: String, ddl: String, fromRow: Row => P,
+      cached: Boolean = true) {
     private val cache = new java.util.concurrent.ConcurrentHashMap[String, P]()
     private val schema =
       StructType(StructType.fromDDL(ddl).map(_.copy(nullable = false)))
@@ -158,7 +158,7 @@ object BandIndex {
               s"corrupt $name sidecar at $path/$name: directory exists but " +
                 "holds no parameter row (interrupted index build?) — rebuild " +
                 "the index or restore the sidecar")))
-          cache.put(path, v)
+          if (cached) cache.put(path, v)
           Some(v)
         }
       }
@@ -166,7 +166,7 @@ object BandIndex {
     def put(spark: SparkSession, path: String, v: P): Unit = {
       spark.createDataFrame(java.util.List.of(Row.fromTuple(v)), schema)
         .coalesce(1).write.mode("overwrite").parquet(s"$path/$name")
-      cache.put(path, v)
+      if (cached) cache.put(path, v)
     }
 
     def copy(spark: SparkSession, from: String, to: String): Unit =

@@ -35,7 +35,7 @@ import graft.operators.Iterate.MaterializeOps
   * precision is unharmed, so the retry discipline is "re-append on any
   * doubt". Cross-batch bucket-occupancy divergence is observable via
   * [[cappedBucketReport]]. The band write, probe, compaction (both
-  * tables plus `_geom/`), report and forget are the [[BandIndex]] core's.
+  * tables plus `_geom/`) and report are the [[BandIndex]] core's.
   */
 object EmbeddingLshIndex {
 
@@ -85,8 +85,10 @@ object EmbeddingLshIndex {
   private val core = new BandIndex(Seq("table", "sig"),
     tables = Seq("bands", "vecs"), sidecar = Some(geom))
 
-  /** The persisted build geometry, when the index carries one (cached
-    * per path on the driver — see [[BandIndex.Sidecar]]).
+  /** The persisted build geometry, when the index carries one — cached
+    * per path on the driver, so one writer per index path is assumed: a
+    * rebuild at the same path by another process is not seen (see
+    * [[BandIndex.Sidecar]]).
     */
   def geometry(spark: SparkSession, path: String): Option[Geometry] =
     geom.get(spark, path)
@@ -176,7 +178,8 @@ object EmbeddingLshIndex {
     * id, cast to the tables' long.
     */
   def forget(spark: SparkSession, path: String, ids: DataFrame): Unit =
-    core.forget(path, ids.select(col(ids.columns.head).cast("long")))
+    IndexMaintenance.appendTombstones(path,
+      ids.select(col(ids.columns.head).cast("long")))
 
   /** Buckets whose cross-batch occupancy (distinct ids) exceeds the cap —
     * the condition under which incremental results can diverge from a

@@ -116,31 +116,28 @@ object FamilyIndex {
   /** Compose the rep-remap tables `(from, to)` in version order:
     * `(r1 ⨾ r2)(x) = r2(r1(x))` where defined, with r2's fresh domain
     * entries carried over — substitution that fully resolves rep chains
-    * (5→3 then 3→1 composes to 5→1 AND 3→1). A single live delta's
-    * remap is materialized as-is, so repeated reads don't re-run the
-    * fold lineage. A longer chain is collected in ONE job — the tables
-    * are broadcast-sized by construction — and composed on the driver
-    * into a local table, so read cost stays linear in the live deltas:
-    * a plan-level pairwise fold reads its left side twice per step and
+    * (5→3 then 3→1 composes to 5→1 AND 3→1). The tables are collected in
+    * ONE job — they are broadcast-sized by construction — and composed
+    * on the driver into a local table, so repeated reads don't re-run
+    * the fold lineage and read cost stays linear in the live deltas: a
+    * plan-level pairwise fold reads its left side twice per step and
     * doubles the composed plan with every delta.
     */
   private def composeRemaps(spark: SparkSession,
-      remaps: Seq[DataFrame]): DataFrame =
-    if (remaps.size == 1) remaps.head.materialized
-    else {
-      val steps = remaps.zipWithIndex
-        .map { case (r, i) => r.withColumn("step", lit(i)) }
-        .reduce(_ unionByName _).collect()
-        .groupBy(_.getInt(2)).toSeq.sortBy(_._1)
-        .map(_._2.map(r => r.get(0) -> r.get(1)).toMap)
-      val composed = steps.foldLeft(Map.empty[Any, Any]) { (acc, r2) =>
-        acc.map { case (f, t) => f -> r2.getOrElse(t, t) } ++
-          r2.filter { case (f, _) => !acc.contains(f) }
-      }
-      spark.createDataFrame(
-        composed.toSeq.map { case (f, t) => Row(f, t) }.asJava,
-        remaps.head.schema)
+      remaps: Seq[DataFrame]): DataFrame = {
+    val steps = remaps.zipWithIndex
+      .map { case (r, i) => r.withColumn("step", lit(i)) }
+      .reduce(_ unionByName _).collect()
+      .groupBy(_.getInt(2)).toSeq.sortBy(_._1)
+      .map(_._2.map(r => r.get(0) -> r.get(1)).toMap)
+    val composed = steps.foldLeft(Map.empty[Any, Any]) { (acc, r2) =>
+      acc.map { case (f, t) => f -> r2.getOrElse(t, t) } ++
+        r2.filter { case (f, _) => !acc.contains(f) }
     }
+    spark.createDataFrame(
+      composed.toSeq.map { case (f, t) => Row(f, t) }.asJava,
+      remaps.head.schema)
+  }
 
   /** The current assignment `(id, family)` — every id that ever
     * appeared in a folded pair, read through the composed delta chain:

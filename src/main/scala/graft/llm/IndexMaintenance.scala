@@ -25,12 +25,15 @@ object IndexMaintenance {
     * [[appendTombstones]]) are MATERIALIZED: forgotten ids are
     * physically filtered out of the rewrite and the successor carries
     * no `_dels` sidecar (underscore-prefixed dirs are invisible to the
-    * table read, so nothing copies it).
+    * table read, so nothing copies it). `delsRoot` is where the `_dels`
+    * sidecar lives when it is not the table itself: the root of a
+    * multi-table index ([[BandIndex]]).
     */
   def compactTable(spark: SparkSession, inPath: String, outPath: String,
-      targetFiles: Int): Unit = {
+      targetFiles: Int, delsRoot: Option[String] = None): Unit = {
     require(targetFiles >= 1)
-    minusTombstones(spark, inPath, spark.read.parquet(inPath))
+    minusTombstones(spark, delsRoot.getOrElse(inPath),
+      spark.read.parquet(inPath))
       .coalesce(targetFiles)
       .write.mode("overwrite").parquet(outPath)
   }

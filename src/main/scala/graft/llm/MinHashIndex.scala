@@ -15,7 +15,7 @@ import graft.operators.Iterate.MaterializeOps
   * occupancy — the 100 TB history is touched only through the band-key
   * join, never re-shingled, never re-signed.
   *
-  * The write, probe, compaction, occupancy report and forget — with the
+  * The write, probe, compaction and occupancy report — with the
   * hot-bucket caps and the "re-append on any doubt" crash contract —
   * are the [[BandIndex]] core's. The exact indexes ([[LineDedupIndex]]/[[CmsIndex]]/
   * [[Bm25Index]]), where a torn write would corrupt counts rather than
@@ -59,7 +59,9 @@ object MinHashIndex {
   private val core = new BandIndex(Seq("band", "bkey"), sidecar = Some(geom))
 
   /** The persisted geometry, or None for a pre-sidecar (legacy) index.
-    * Only ABSENCE maps to None: a transient read failure or a corrupt
+    * Cached per path on the driver, so one writer per index path is
+    * assumed: a rebuild at the same path by another process is not seen
+    * (see [[BandIndex.Sidecar]]). Only ABSENCE maps to None: a transient read failure or a corrupt
     * (rowless) sidecar must propagate, because silently falling back to
     * call-site defaults is exactly the mismatched-geometry recall
     * collapse the sidecar exists to prevent.
@@ -154,8 +156,13 @@ object MinHashIndex {
       targetFiles: Int = 8): Unit =
     core.compact(spark, path, outPath, targetFiles)
 
-  /** Tombstone-forget indexed docs — the takedown path ([[BandIndex.forget]]). */
-  def forget(path: String, ids: DataFrame): Unit = core.forget(path, ids)
+  /** Tombstone-forget indexed docs — the takedown path; see
+    * [[IndexMaintenance.appendTombstones]] for the full contract
+    * (probes anti-join history against `_dels`; compact materializes;
+    * no re-ingest while the tombstone is live).
+    */
+  def forget(path: String, ids: DataFrame): Unit =
+    IndexMaintenance.appendTombstones(path, ids)
 
   /** Near-dup pairs INVOLVING the new batch: new-vs-indexed plus
     * new-vs-new, LSH candidates jaccard-verified at `threshold`

@@ -25,14 +25,16 @@ import graft.operators.Iterate.MaterializeOps
   * (pinned in SimHashIndexSpec). Hot-bucket caps apply per written
   * batch, same caveat as [[MinHashIndex]]: [[cappedBucketReport]]
   * surfaces when cross-batch occupancy breaks that equivalence. The
-  * write, probe, compaction, report and forget are the [[BandIndex]]
+  * write, probe, compaction and report are the [[BandIndex]]
   * core's; the probe derives each pair's Hamming distance from the two
   * stored signatures.
   */
 object SimHashIndex {
 
+  // uncached: the sidecar only guards, so every probe and append checks
+  // the parameters on disk, also after a rebuild by another process
   private val params = new BandIndex.Sidecar[(Int, Int)]("_params",
-    "radius INT, blocks INT", r => (r.getInt(0), r.getInt(1)))
+    "radius INT, blocks INT", r => (r.getInt(0), r.getInt(1)), cached = false)
   private val core = new BandIndex(Seq("combo", "bkey"),
     (a, b) => Seq(bit_count(col(s"$a.simhash").bitwiseXOR(col(s"$b.simhash")))
       .as("hamming")),
@@ -175,6 +177,11 @@ object SimHashIndex {
       maxBucketSize: Long = 100000L): DataFrame =
     core.cappedBucketReport(spark, path, maxBucketSize)
 
-  /** Tombstone-forget indexed docs — the takedown path ([[BandIndex.forget]]). */
-  def forget(path: String, ids: DataFrame): Unit = core.forget(path, ids)
+  /** Tombstone-forget indexed docs — the takedown path; see
+    * [[IndexMaintenance.appendTombstones]] for the full contract
+    * (probes anti-join history against `_dels`; compact materializes;
+    * no re-ingest while the tombstone is live).
+    */
+  def forget(path: String, ids: DataFrame): Unit =
+    IndexMaintenance.appendTombstones(path, ids)
 }

@@ -22,7 +22,7 @@ import graft.llm.BandIndex
   * ingest.
   *
   * The write, probe (each pair's Hamming distance comes from the two
-  * stored hashes), compaction, report and forget — with the wing's caps
+  * stored hashes), compaction and report — with the wing's caps
   * and "re-append on any doubt" crash contract — are the [[BandIndex]]
   * core's.
   */
@@ -85,6 +85,11 @@ object PHashIndex {
     core.probe(spark, path, explodeBands(newHashes, idCol), maxBucketSize)
       .filter(col("hamming") <= radius)
 
-  /** Tombstone-forget indexed docs — the takedown path ([[BandIndex.forget]]). */
-  def forget(path: String, ids: DataFrame): Unit = core.forget(path, ids)
+  /** Tombstone-forget indexed docs — the takedown path; see
+    * [[graft.llm.IndexMaintenance.appendTombstones]] for the full contract
+    * (probes anti-join history against `_dels`; compact materializes;
+    * no re-ingest while the tombstone is live).
+    */
+  def forget(path: String, ids: DataFrame): Unit =
+    graft.llm.IndexMaintenance.appendTombstones(path, ids)
 }

@@ -97,6 +97,19 @@ class BandIndexSpec extends AnyFunSuite {
       spark, path, docs, "doc_id", "text"))
   }
 
+  test("SimHashIndex's fail-fast check sees _params rewritten by another writer") {
+    val path = tmp("shrebuild")
+    SimHashIndex.build(docs, path, "doc_id", "text")
+    assert(SimHashIndex.storedParams(spark, path).contains((3, 6)))
+    // another process rebuilds at the same path under other parameters:
+    // nothing in this JVM sees the write
+    Seq((4, 8)).toDF("radius", "blocks").coalesce(1)
+      .write.mode("overwrite").parquet(s"$path/_params")
+    assert(SimHashIndex.storedParams(spark, path).contains((4, 8)))
+    intercept[IllegalArgumentException](SimHashIndex.incrementalNearDupPairs(
+      spark, path, docs, "doc_id", "text"))
+  }
+
   test("a rowless _geom sidecar (interrupted build) fails EmbeddingLshIndex with a diagnosis") {
     val path = tmp("elgeom")
     spark.emptyDataFrame.withColumn("tables", lit(0))

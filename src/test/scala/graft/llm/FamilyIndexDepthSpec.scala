@@ -79,8 +79,8 @@ class FamilyIndexDepthSpec extends AnyFunSuite {
       assert(DeltaChain.liveDeltaVersions(path).size == d)
       val (executions, scans) = workOf(FamilyIndex.assignment(spark, path).collect())
       work += ((executions, scans))
-      // composition adds at most one job at any depth (a depth-1 read is
-      // the materialized remap plus the read itself)...
+      // composition adds at most one job at any depth (the collect of
+      // the remaps, then the read itself)...
       assert(executions <= 2, s"depth $d ran $executions executions")
       // ...and its scans grow linearly: never more than depth × the
       // depth-1 read's (a pairwise plan fold doubles per delta)
